@@ -24,60 +24,12 @@ from ..core import ids as core_ids
 from ..core import mill as core_mill
 from ..core.contextfix import fix_all
 
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_jsonld_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    """html binary + url → array of raw JSON-LD strings (P1, S1).
-
-    Byte-identity contract: each array element is the verbatim script-tag
-    inner text (or the verbatim body for .json/.jsonld URLs)."""
-
-    def one(h, u):
-        if h is None:
-            return []
-        s = bytes(h).decode("utf-8", errors="replace")
-        return core_extract.extract_jsonld_strings(s, u or "")
-
-    return pd.Series([one(h, u) for h, u in zip(html, url)])
-
-
 _BLOCK_SCHEMA = T.ArrayType(
     T.StructType([
         T.StructField("jsonld", T.StringType()),
         T.StructField("via", T.StringType()),
     ])
 )
-
-
-@F.pandas_udf(_BLOCK_SCHEMA)
-def extract_with_recovery_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    """html binary + url → array of (jsonld, via) blocks: the static
-    script-tag extraction (via='static', byte-identity contract) plus —
-    ONLY when a page yields zero static blocks and its bytes hint at
-    embedded JSON-LD — the conservative JS-inline recovery
-    (via='js_inline', core/extract.py:find_inline_jsonld).
-
-    One Arrow pass: the gate runs Python-side on the already-decoded
-    string, so non-candidate pages pay a substring check, not a second
-    UDF evaluation (a column-level F.when(gate, udf) gate does NOT
-    short-circuit — Spark extracts Python UDFs out of conditionals and
-    runs them on every row)."""
-
-    def one(h, u):
-        if h is None:
-            return []
-        s = bytes(h).decode("utf-8", errors="replace")
-        blocks = [(b, "static")
-                  for b in core_extract.extract_jsonld_strings(s, u or "")]
-        if not blocks and (
-            "application/ld+json" in s or '"@context"' in s
-            or '"@type"' in s or '"@graph"' in s
-        ):
-            blocks = [(b, "js_inline")
-                      for b in core_extract.find_inline_jsonld(s)]
-        return blocks
-
-    return pd.Series([one(h, u) for h, u in zip(html, url)])
 
 
 _QUAD_FIELDS = T.StructType(
@@ -216,9 +168,12 @@ EXTRACT_PAGE_SCHEMA = T.StructType([
 
 @F.pandas_udf(EXTRACT_PAGE_SCHEMA)
 def extract_page_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    """Fused per-page extraction: JSON-LD blocks (static + js-inline
-    recovery, identical contract to ``extract_with_recovery_udf``) PLUS
-    the microdata/RDFa Lite structured triples
+    """Fused per-page extraction: JSON-LD blocks — the verbatim
+    script-tag inner text (via='static', byte-identity contract), plus,
+    ONLY when a page yields zero static blocks and its bytes hint at
+    embedded JSON-LD, the conservative JS-inline recovery (via=
+    'js_inline', core/extract.py:find_inline_jsonld) — PLUS the
+    microdata/RDFa Lite structured triples
     (core/structured.page_structured, blank nodes skolemized per content
     sha) in ONE Arrow pass.  At web scale the raw html is the dominant
     IO + transfer cost of the whole job — fusing means it is scanned,

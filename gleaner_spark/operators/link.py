@@ -2,21 +2,21 @@
 reference defers to downstream tools).
 
 Pipeline: entity mentions (subjects with a schema:name) → char-3-gram
-shingles → md5-MinHash signature → banded LSH bucketing → candidate
-pairs within buckets → exact Jaccard verification → connected
-components (GraphFrames-style iterative self-join with localCheckpoint)
-→ sameAs map → subject/object rewrite of the triples relation.
+shingles → MinHash signature, banded LSH bucketing and capped bucket
+self-join (operators/neardup.py, the one near-duplicate kernel) →
+digit-token check + exact Jaccard verification → connected components
+(large-star/small-star with lineage barriers) → sameAs map →
+subject/object rewrite of the triples relation.
 
-Everything through pair generation is JVM-side column expressions
-(md5 / transform / array_min — no Python), so the expensive part scales
-with executors.  Skew guards: LSH buckets are capped (a stop-word-ish
+Pair generation is column expressions plus, for dictionaries up to the
+kernel's gate, one driver-side rank encoding of the distinct shingles —
+no Python UDF.  Skew guards: LSH buckets are capped (a stop-word-ish
 name shared by millions of entities would otherwise go quadratic) and
 the CC joins run under AQE skew handling.
 
-Determinism: md5 is seeded by band index, candidate pairs are ordered
-(a < b), CC converges to the component-minimum label — output is
-independent of partitioning and parallelism level, which the N-vs-4N
-scaling evidence requires.
+Determinism: candidate pairs are ordered (a < b), CC converges to the
+component-minimum label — output is independent of partitioning and
+parallelism level, which the N-vs-4N scaling evidence requires.
 """
 
 from __future__ import annotations
@@ -29,16 +29,15 @@ logger = logging.getLogger(__name__)
 
 
 from ..functions.barrier import reliable_ckpt as _ckpt  # shared barrier
+from .neardup import MAX_BUCKET, minhash_lsh_pairs, minhash_signature
 
 SCHEMA_NAME_PRED = "<https://schema.org/name>"
 RDF_TYPE_PRED = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 
-NUM_HASHES = 16
 # band size 2 → 8 bands: P(candidate) = 1-(1-s²)⁸ ≈ 0.999 at s = 0.75,
 # so LSH recall is not the bottleneck; exact Jaccard verification prunes.
 BAND_SIZE = 2
 JACCARD_THRESHOLD = 0.7
-MAX_BUCKET = 64          # LSH bucket cap: quadratic-blowup guard
 # large-star/small-star converges in O(log² n) rounds (provably; ~5 in
 # practice) — 30 is a generous ceiling, and hitting it RAISES instead of
 # returning silently-wrong labels.
@@ -118,82 +117,41 @@ def with_shingles(entities: DataFrame) -> DataFrame:
     )
 
 
-def with_minhash(entities: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """Rotation-md5 MinHash on the codegen path (functions/minhash.py):
-    one digest per shingle, exploded rows + groupBy-min instead of
-    interpreted higher-order-function lambdas.  Signature joined back
-    onto the entity rows.  Bit-identical to
-    core.text.md5_minhash_signature."""
-    from ..functions.minhash import minhash_frame
-
-    sig = minhash_frame(entities, ["entity"], k=num_hashes)
-    return entities.join(
-        sig.withColumnRenamed("mh", "minhash"), "entity"
-    )
-
-
 def lsh_candidate_pairs(
     entities: DataFrame,
     band_size: int = BAND_SIZE,
     threshold: float = JACCARD_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
+    observation: Observation | None = None,
 ) -> DataFrame:
-    """Banded LSH → pairwise candidates within buckets → exact Jaccard
-    verification.  One shuffle on the band key, one self-join per band
-    bucket (buckets are capped), one semi-join back for verification."""
+    """Banded LSH (operators/neardup.py) → pairwise candidates within
+    capped buckets → digit-token check and exact Jaccard verification,
+    inline in the bucket self-join.  ``observation`` receives the bucket
+    cap's drop counts once an action has run the pairs."""
     # deterministic representative name per entity BEFORE signatures:
     # an entity with several schema:name literals would otherwise get a
     # partitioning-dependent row from dropDuplicates
     uniq = entities.groupBy("entity").agg(F.min("name").alias("name"))
     ent = with_shingles(uniq)
-    ent = with_minhash(ent).withColumnRenamed("minhash", "minhash_sig")
-    ent = ent.select("entity", "shingles", "digit_tokens",
-                     F.col("minhash_sig").alias("minhash"))
-
-    n_bands = NUM_HASHES // band_size
-    bands = ent.select(
-        "entity", "shingles", "digit_tokens",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {n_bands - 1}),"
-                f" b -> concat_ws('|', slice(minhash, b * {band_size} + 1,"
-                f" {band_size})))"
-            )
-        ).alias("band_idx", "band_key"),
-    ).withColumn("bucket", F.concat_ws("#", "band_idx", "band_key"))
-
-    # cap pathological buckets (stopword-ish names) — observed, not
-    # silent: sameas_map logs the dropped-bucket count after the action
-    from ..functions.minhash import cap_buckets
-
-    obs = Observation("lsh_bucket_cap")
-    bands = cap_buckets(bands, ["bucket"], max_bucket, observation=obs)
-
-    left = bands.select(F.col("bucket"),
-                        F.col("entity").alias("a"),
-                        F.col("shingles").alias("sh_a"),
-                        F.col("digit_tokens").alias("dt_a"))
-    right = bands.select(F.col("bucket"),
-                         F.col("entity").alias("b"),
-                         F.col("shingles").alias("sh_b"),
-                         F.col("digit_tokens").alias("dt_b"))
-    pairs = (
-        left.join(right, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("dt_a") == F.col("dt_b"))
-        .select("a", "b", "sh_a", "sh_b")
-        .dropDuplicates(["a", "b"])
+    sig = minhash_signature(
+        ent.select("entity", F.explode("shingles").alias("s")), "entity")
+    jaccard = F.size(F.array_intersect("shingles_a", "shingles_b")) / F.size(
+        F.array_union("shingles_a", "shingles_b")
     )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
+
+    def verify(cand: DataFrame) -> DataFrame:
+        return (
+            cand.filter(F.col("digit_tokens_a") == F.col("digit_tokens_b"))
+            .withColumn("jaccard", jaccard)
+            .filter(F.col("jaccard") >= threshold)
+            .select("a", "b", "jaccard")
+        )
+
+    return minhash_lsh_pairs(
+        sig.join(ent, "entity"), "entity", band_size, max_bucket,
+        carry=["shingles", "digit_tokens"], verify=verify,
+        observation=observation,
     )
-    out = (
-        pairs.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    out._lsh_observation = obs  # surfaced for post-action drop logging
-    return out
 
 
 #: Edge-count ceiling for the driver-local union-find fast path: below
@@ -408,8 +366,7 @@ def connected_components(
             F.coalesce("component", F.col("entity")).alias("component"),
         )
     )
-    # observability: rounds actually run + barriers taken (the
-    # _lsh_observation pattern — consumed by run_stats/pipeline logging)
+    # observability: rounds actually run + barriers taken
     out._cc_observation = {"rounds": rounds, "checkpoints": n_ckpts,
                            "ckpt_every": ckpt_every}
     return out
@@ -452,20 +409,19 @@ def sameas_map(triples: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Data
         F.col("rep").alias("entity"), F.col("name_norm").alias("name")
     )
     with _timed("link.lsh_pairs"):
-        pairs = lsh_candidate_pairs(reps, threshold=threshold)
-        edges = _ckpt(pairs)
-        obs = getattr(pairs, "_lsh_observation", None)
-        if obs is not None:
-            try:
-                m = obs.get
-                if m.get("dropped_buckets"):
-                    logger.warning(
-                        "LSH bucket cap dropped %s of %s buckets (> %d "
-                        "members); members still pair via other bands",
-                        m["dropped_buckets"], m["total_buckets"], MAX_BUCKET,
-                    )
-            except Exception:  # metric unavailable must never fail the job
-                pass
+        obs = Observation("lsh_bucket_cap")
+        edges = _ckpt(lsh_candidate_pairs(reps, threshold=threshold,
+                                          observation=obs))
+        try:
+            m = obs.get
+            if m.get("dropped_buckets"):
+                logger.warning(
+                    "LSH bucket cap dropped %s of %s buckets (> %d "
+                    "members); members still pair via other bands",
+                    m["dropped_buckets"], m["total_buckets"], MAX_BUCKET,
+                )
+        except Exception:  # metric unavailable must never fail the job
+            logger.debug("LSH bucket-cap metric unavailable", exc_info=True)
     with _timed("link.cc"):
         components = _ckpt(connected_components(edges))
 

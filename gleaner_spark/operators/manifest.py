@@ -64,20 +64,25 @@ def write_manifest(manifest: DataFrame, base_dir: str) -> None:
     )
 
 
+def is_path_not_found(exc: BaseException) -> bool:
+    """True iff a Spark read failed because its path (or, in a catalog,
+    its table) does not exist — the one read failure that may mean "no
+    prior state" (first run, first micro-batch).  Every other failure
+    (corrupt or unreadable files, conflicting layouts) must propagate:
+    treating it as absent would silently reprocess or re-ingest
+    history."""
+    msg = str(exc)
+    return ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+            or "TABLE_OR_VIEW_NOT_FOUND" in msg)
+
+
 def read_manifest(spark: SparkSession, base_dir: str) -> DataFrame | None:
+    """The manifest table, or None when the warehouse has none yet.  An
+    unreadable manifest raises."""
     path = manifest_path(base_dir)
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return None
-
-
-def resume_filter(pages: DataFrame, manifest: DataFrame | None,
-                  stage: str = "extract") -> DataFrame:
-    """J3: drop URLs the manifest already covers — the reference's
-    ``difference(sitemapURLs, alreadySummoned)`` (resources.go:210-245)
-    as a left-anti join.  With no manifest: full mode."""
-    if manifest is None:
-        return pages
-    done = manifest.filter(F.col("stage") == stage).select("url").distinct()
-    return pages.join(done, "url", "left_anti")
+    except Exception as e:
+        if is_path_not_found(e):
+            return None
+        raise

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.udfs import extract_jsonld_udf, mill_udf, process_doc_udf
+from ..functions.udfs import extract_page_udf, mill_udf, process_doc_udf
 
 DEFAULT_BUCKET = "gleaner"
 
@@ -73,26 +73,25 @@ def salted_repartition(pages: DataFrame, partitions: int, salt: int = 8) -> Data
     )
 
 
-def extract_stage(pages_with_source: DataFrame,
-                  recover_js_inline: bool = True,
-                  extract_structured: bool = True) -> DataFrame:
+def extract_stage(pages_with_source: DataFrame) -> DataFrame:
     """S1: html → exploded candidate JSON-LD strings (+ per-page
-    structured-markup payload).
+    structured-markup payload), in ONE fused Arrow pass
+    (``functions.udfs.extract_page_udf``).
 
     Keeps zero-block pages as block_idx = -1 / jsonld NULL rows so the
     visit is recorded (the reference's ``NILL:`` KV bookkeeping,
     acquire.go:187-191) — metrics and the checkpoint manifest need them;
     downstream stages filter them out.
 
-    ``recover_js_inline`` (default on): pages with ZERO static blocks
-    whose bytes still hint at JSON-LD get a conservative recovery pass
-    over plain <script> code — the static subset of what the reference
-    only reaches via headless rendering (headlessNG.go:302-349).
-    Recovered blocks carry ``via = 'js_inline'`` (static ones ``via =
-    'static'``) so stats can report recovered vs remaining headless
-    candidates separately.
+    JS-inline recovery: pages with ZERO static blocks whose bytes still
+    hint at JSON-LD get a conservative recovery pass over plain
+    <script> code — the static subset of what the reference only
+    reaches via headless rendering (headlessNG.go:302-349).  Recovered
+    blocks carry ``via = 'js_inline'`` (static ones ``via = 'static'``)
+    so stats can report recovered vs remaining headless candidates
+    separately.
 
-    ``extract_structured`` (default on): microdata + RDFa Lite triples
+    Structured markup: microdata + RDFa Lite triples
     (core/structured.page_structured) ride along as per-page ``sd_sha``
     / ``sd`` columns, carried on each page's single anchor row
     (block_idx ≤ 0) and NULL elsewhere, so the exploded relation stores
@@ -102,61 +101,23 @@ def extract_stage(pages_with_source: DataFrame,
     crossing for both extraction surfaces (all gates run Python-side on
     the already-decoded string: an F.when(gate, udf) column gate would
     NOT short-circuit — Spark evaluates Python UDFs unconditionally).
-    """
-    from ..functions.udfs import (
-        EXTRACT_PAGE_SCHEMA,
-        extract_page_udf,
-        extract_with_recovery_udf,
-    )
 
-    sd_t = EXTRACT_PAGE_SCHEMA["sd"].dataType
-    if recover_js_inline and extract_structured:
-        extracted = (
-            pages_with_source
-            .withColumn("page", extract_page_udf(F.col("html"), F.col("url")))
-            .withColumn("blocks", F.col("page.blocks"))
-            .withColumn("sd_sha", F.col("page.sd_sha"))
-            .withColumn("sd", F.col("page.sd"))
-            # headless-coverage signal (S5 gap metric): the raw bytes
-            # mention ld+json somewhere — if extraction then yields zero
-            # blocks, the JSON-LD is likely injected by scripts the
-            # reference renders headlessly (headlessNG.go:151-429).
-            # Computed inside the fused UDF pass (the string is already
-            # decoded there; a JVM contains() would re-decode every
-            # page's bytes just to substring-scan them).  Stats counts
-            # the (block_idx = -1 AND marker) pages so the gap is
-            # MEASURED instead of silently missing.
-            .withColumn("has_ldjson_marker", F.col("page.has_ldjson_marker"))
-            .drop("page")
-        )
-    elif recover_js_inline:
-        extracted = (
-            pages_with_source
-            .withColumn("blocks",
-                        extract_with_recovery_udf(F.col("html"), F.col("url")))
-            .withColumn("sd_sha", F.lit(None).cast("string"))
-            .withColumn("sd", F.lit(None).cast(sd_t))
-        )
-    else:
-        extracted = (
-            pages_with_source
-            .withColumn(
-                "blocks",
-                F.transform(
-                    extract_jsonld_udf(F.col("html"), F.col("url")),
-                    lambda x: F.struct(x.alias("jsonld"),
-                                       F.lit("static").alias("via")),
-                ),
-            )
-            .withColumn("sd_sha", F.lit(None).cast("string"))
-            .withColumn("sd", F.lit(None).cast(sd_t))
-        )
-    if "has_ldjson_marker" not in extracted.columns:
-        # non-fused branches: JVM contains() on the decoded bytes
-        extracted = extracted.withColumn(
-            "has_ldjson_marker",
-            F.col("html").cast("string").contains("application/ld+json"),
-        )
+    ``has_ldjson_marker`` is the headless-coverage signal (S5 gap
+    metric): the raw bytes mention ld+json somewhere — if extraction
+    then yields zero blocks, the JSON-LD is likely injected by scripts
+    the reference renders headlessly (headlessNG.go:151-429).  Stats
+    counts the (block_idx = -1 AND marker) pages so the gap is MEASURED
+    instead of silently missing.
+    """
+    extracted = (
+        pages_with_source
+        .withColumn("page", extract_page_udf(F.col("html"), F.col("url")))
+        .withColumn("blocks", F.col("page.blocks"))
+        .withColumn("sd_sha", F.col("page.sd_sha"))
+        .withColumn("sd", F.col("page.sd"))
+        .withColumn("has_ldjson_marker", F.col("page.has_ldjson_marker"))
+        .drop("page")
+    )
     cols = ["url", "warc_ts", "source", "host", "lang",
             "identifiertype", "identifierpath", "fixcontextoption",
             "has_ldjson_marker", "sd_sha", "sd"]

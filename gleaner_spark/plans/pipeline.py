@@ -128,13 +128,6 @@ class PipelineConfig:
     mode: str = "full"            # 'full' | 'diff' (resume)
     link_entities: bool = True
     salt_partitions: int | None = None
-    write_stats: bool = True
-    #: microdata/RDFa Lite extraction (operators/stages.structured_stage)
-    #: — beyond reference parity but part of the north-star extraction
-    #: surface; fused into extract's single html Arrow pass, so it adds
-    #: zero extra scans (near-free on markup-less corpora: the parse is
-    #: gated Python-side on cheap marker checks)
-    extract_structured: bool = True
 
 
 @dataclass
@@ -318,10 +311,8 @@ def _run_pipeline(
     # parallelism at ~8 tasks.  Only the query-facing triples table is
     # source-partitioned (partition pruning is worth it there).
     with _timed("extract"):
-        blocks = _persist(
-            extract_stage(pages, extract_structured=cfg.extract_structured),
-            base, "blocks", None, write_mode, cat,
-        )
+        blocks = _persist(extract_stage(pages), base, "blocks", None,
+                          write_mode, cat)
 
     def _extract_bookkeeping():
         with _timed("extract.manifest+lineage"):
@@ -343,15 +334,20 @@ def _run_pipeline(
     docs = dedup_docs(docs_all)
     if cfg.mode == "diff":
         # cross-run content dedup: drop docs whose sha an earlier run
-        # already stored (same JSON-LD reached via a new URL)
+        # already stored (same JSON-LD reached via a new URL).  Only a
+        # missing table means "no prior docs"; any other read failure
+        # raises instead of silently turning the dedup off
         try:
             prior = (
                 spark.read.table(f"{cat[0]}.{cat[1]}.docs") if cat
                 else spark.read.parquet(os.path.join(base, "docs"))
             )
+        except Exception as e:
+            if not mf.is_path_not_found(e):
+                raise
+            prior = None
+        if prior is not None:
             docs = docs.join(prior.select("doc_sha1"), "doc_sha1", "left_anti")
-        except Exception:
-            pass
     with _timed("dedup"):
         docs = _persist(docs, base, "docs", None, write_mode, cat)
 
@@ -377,12 +373,11 @@ def _run_pipeline(
     # Microdata/RDFa Lite triples union in before persist/link, so they
     # ride the same raw-triples table, entity linking and materialize
     # dedup as the JSON-LD mill output.  The parse was fused into
-    # extract's single html Arrow pass; this branch reads only the tiny
-    # sd columns back off the persisted blocks table (column pruning —
-    # the raw html is never re-scanned).  In diff mode ``blocks`` is the
+    # extract's single html Arrow pass; this reads only the tiny sd
+    # columns back off the persisted blocks table (column pruning — the
+    # raw html is never re-scanned).  In diff mode ``blocks`` is the
     # resume delta, so append semantics carry over unchanged.
-    if cfg.extract_structured:
-        triples = triples.unionByName(structured_stage(blocks, cfg.bucket))
+    triples = triples.unionByName(structured_stage(blocks, cfg.bucket))
 
     # Persist raw (pre-linking) triples — the reference's ``milled/``
     # prefix as a table — and CACHE the read-back: the linker scans the
@@ -421,15 +416,13 @@ def _run_pipeline(
 
     aw.submit(_materialize_bookkeeping)
 
-    stats = None
-    if cfg.write_stats:
-        stats = run_stats(blocks, docs_all)
+    stats = run_stats(blocks, docs_all)
 
-        def _stats_bookkeeping(stats=stats):
-            with _timed("stats"):
-                _write(stats, base, "stats", cat=cat)
+    def _stats_bookkeeping():
+        with _timed("stats"):
+            _write(stats, base, "stats", cat=cat)
 
-        aw.submit(_stats_bookkeeping)
+    aw.submit(_stats_bookkeeping)
 
     # everything bookkeeping is durable (or raised) before we return
     with _timed("bookkeeping.join"):

@@ -32,7 +32,7 @@ STOPWORDS = {
 }
 
 # The LSH band structure is derived from the target Jaccard threshold
-# (functions.minhash.lsh_params: minimize S-curve fp+fn area around t),
+# (operators.neardup.lsh_params: minimize S-curve fp+fn area around t),
 # not hardcoded — at t=0.7 / k=16 it resolves to 4 bands of 4:
 # P(candidate | J) = 1-(1-J⁴)⁴ ≈ 0.98 at J=0.8 but ~4e-4 at J=0.1 —
 # low-similarity pairs (the quadratic mass in any big corpus) almost
@@ -41,7 +41,7 @@ STOPWORDS = {
 # the sf0.1 dup-rich corpus vs ~10k / ~8 s with this setting.
 NUM_MINHASH = 16
 LSH_THRESHOLD = 0.7
-from ..functions.minhash import lsh_params as _lsh_params  # noqa: E402
+from ..operators.neardup import lsh_params as _lsh_params  # noqa: E402
 
 LSH_BANDS, LSH_BAND = _lsh_params(LSH_THRESHOLD, NUM_MINHASH)
 
@@ -80,7 +80,7 @@ def _minhash_sql(shingles: str, duck: bool, k: int = NUM_MINHASH) -> str:
     """Rotation MinHash (see core/text.py:md5_minhash_signature): hash i
     = md5 hex rotated left 2·i chars, one digest per shingle.  The array
     form is for oracles / small inputs; the Spark hot path uses
-    ``functions.minhash.minhash_from_rows`` (exploded rows →
+    ``operators.neardup.minhash_from_rows`` (exploded rows →
     whole-stage-codegen md5 + substring, then groupBy-min) because
     per-element expressions inside
     higher-order functions run interpreted — measured ~80 s vs ~3 s at
@@ -782,11 +782,13 @@ def q_minhash_signature(spark, sf_dir):
     column expressions over shingle rows, then groupBy-min — the
     array/HOF formulation runs interpreted per element and was measured
     ~25× slower at sf0.1."""
-    from ..functions.minhash import minhash_from_rows
+    from ..operators.neardup import minhash_from_rows
 
     d = _load(spark, sf_dir, "documents")
-    return minhash_from_rows(_shingle_rows(d), ["doc_id"], k=NUM_MINHASH).select(
-        "doc_id", F.concat_ws("|", "mh").alias("minhash_sig")
+    return minhash_from_rows(_shingle_rows(d), "doc_id", k=NUM_MINHASH).select(
+        "doc_id",
+        F.concat_ws("|", *[f"m{i}" for i in range(NUM_MINHASH)])
+        .alias("minhash_sig"),
     )
 
 
@@ -796,9 +798,8 @@ O_MINHASH_SIG = (
 )
 
 
-# LSH bucket cap (quadratic-blowup guard) — the single shared constant
-# and join shape live in operators.link / functions.minhash.cap_buckets
-from ..operators.link import MAX_BUCKET as LSH_MAX_BUCKET  # noqa: E402
+# LSH bucket cap (quadratic-blowup guard) — shared with the linker
+from ..operators.neardup import MAX_BUCKET as LSH_MAX_BUCKET  # noqa: E402
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
@@ -808,127 +809,16 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     ordered distinct pairs.  Buckets larger than LSH_MAX_BUCKET are
     dropped before the self-join (oracle applies the identical cap).
 
-    Round 6: the signature pass dominated this query's wall time —
-    md5 + 16 rotation-concats evaluated per shingle OCCURRENCE (5.9M
-    rows at sf1.0) when the corpus has only ~29k DISTINCT shingles.
-    When the vocabulary is small enough to broadcast, compute the 16
-    rotated digests once per distinct shingle in a dictionary and
-    broadcast-attach them; the per-occurrence work collapses to 16
-    string-min comparisons.  Same signatures bit-for-bit; the huge-
-    vocabulary fallback is the old exploded-rows path."""
-    from ..functions.barrier import reliable_ckpt
-    from ..functions.minhash import cap_buckets, minhash_from_rows
+    The kernel (operators.neardup) computes the rotated digests once
+    per DISTINCT shingle (~29k at sf1.0 against 5.9M shingle
+    occurrences) and rank-encodes them, so the per-occurrence work is
+    16 int mins and the band keys are ints; same buckets bit-for-bit."""
+    from ..operators.neardup import minhash_lsh_pairs, minhash_signature
 
     d = _dup_rich_docs(spark, sf_dir)
-    # barrier: the dictionary pass and the signature pass both read the
-    # shingle rows, and tokenization is the expensive part — pay it once
-    rows = reliable_ckpt(_shingle_rows(d))
-    dict_df = reliable_ckpt(rows.select("s").distinct())
-    n_dict = dict_df.count()
-    if n_dict <= 1_000_000:
-        # The band buckets downstream only test EQUALITY of signature
-        # values — the hex strings themselves never reach the output.
-        # Rank-encode each rotation on the (tiny, provably ≤1M) distinct
-        # shingle dictionary: id_i(s) = ordinal of rot_i(md5(s)) with
-        # np.unique, so equal rotation strings get equal ids (md5 ties
-        # included) and min-of-ranks ≡ min-of-strings under the same
-        # order.  The per-occurrence work becomes 16 int mins and the
-        # band keys become int tuples — no per-row md5, rotation concats
-        # or string compares.
-        import hashlib
-
-        import numpy as np
-
-        pdf = dict_df.toPandas()
-        hexes = [hashlib.md5(s.encode("utf-8")).hexdigest()
-                 for s in pdf["s"]]
-        for i in range(NUM_MINHASH):
-            rot = np.array([h[2 * i:] + h[:2 * i] for h in hexes])
-            _, inv = np.unique(rot, return_inverse=True)
-            pdf[f"k{i}"] = inv.astype(np.int32)
-        ranks = spark.createDataFrame(pdf)
-        # Barrier the tiny (100k × 16-int) signature table: the band
-        # self-join below reads its input THREE times (bucket counts +
-        # both join sides) and the planner reuses none of the exchanges
-        # (26 Exchanges, 0 Reused measured) — without the barrier the
-        # whole shingle-scan→join→agg subtree re-executes per read.
-        sig_ints = reliable_ckpt(
-            rows.join(F.broadcast(ranks), "s")
-            .groupBy("doc_id")
-            .agg(*[F.min(f"k{i}").alias(f"m{i}")
-                   for i in range(NUM_MINHASH)])
-        )
-        # Band keys as two exact-packed longs per band (rank < 2^31 so
-        # hi*2^32 + lo is bijective — bucket equality, membership and
-        # the cap are IDENTICAL to the string formulation, with int
-        # comparisons instead of 16-char concat_ws strings).
-        pack = [
-            F.struct(
-                F.lit(b).alias("bi"),
-                (F.col(f"m{LSH_BAND * b}").cast("long") * 4294967296
-                 + F.col(f"m{LSH_BAND * b + 1}")).alias("p0"),
-                (F.col(f"m{LSH_BAND * b + 2}").cast("long") * 4294967296
-                 + F.col(f"m{LSH_BAND * b + 3}")).alias("p1"),
-            )
-            for b in range(LSH_BANDS)
-        ]
-        bands = sig_ints.select(
-            "doc_id", F.explode(F.array(*pack)).alias("bk")
-        ).select("doc_id", "bk.bi", "bk.p0", "bk.p1")
-        keys = ["bi", "p0", "p1"]
-        bands = cap_buckets(bands, keys, LSH_MAX_BUCKET)
-        l = bands.select(*keys, F.col("doc_id").alias("a"))
-        r = bands.select(*keys, F.col("doc_id").alias("b"))
-        return (
-            l.join(r, keys)
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-    elif n_dict <= 4_000_000:
-        # vocabulary too big to collect but fine to broadcast: rotations
-        # precomputed once per distinct shingle, string min-agg
-        rot = dict_df.withColumn("h", F.md5("s")).select(
-            "s",
-            *[
-                F.concat(
-                    F.substring("h", 2 * i + 1, 32 - 2 * i),
-                    F.substring("h", 1, 2 * i),
-                ).alias(f"r{i}")
-                for i in range(NUM_MINHASH)
-            ],
-        )
-        sig = (
-            rows.join(F.broadcast(rot), "s")
-            .groupBy("doc_id")
-            .agg(*[F.min(f"r{i}").alias(f"m{i}")
-                   for i in range(NUM_MINHASH)])
-            .select(
-                "doc_id",
-                F.array(*[f"m{i}" for i in range(NUM_MINHASH)]).alias("mh"),
-            )
-        )
-    else:
-        sig = minhash_from_rows(rows, ["doc_id"], k=NUM_MINHASH)
-    n_bands = LSH_BANDS
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {n_bands - 1}),"
-                f" b -> concat_ws('|', slice(mh, b * {LSH_BAND} + 1, {LSH_BAND})))"
-            )
-        ).alias("band_idx", "band_key"),
-    ).withColumn("bucket", F.concat_ws("#", "band_idx", "band_key"))
-    bands = cap_buckets(bands, ["bucket"], LSH_MAX_BUCKET)
-    l = bands.select("bucket", F.col("doc_id").alias("a"))
-    r = bands.select("bucket", F.col("doc_id").alias("b"))
-    return (
-        l.join(r, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    sig = minhash_signature(_shingle_rows(d), "doc_id", k=NUM_MINHASH)
+    return minhash_lsh_pairs(sig, "doc_id", LSH_BAND, LSH_MAX_BUCKET,
+                             k=NUM_MINHASH)
 
 
 O_DEDUP_MINHASH = f"""
@@ -1351,24 +1241,18 @@ def q_dedup_simhash_pairs(spark, sf_dir):
         "doc_id", "sig_hi", "sig_lo",
         F.posexplode(band_slices).alias("band_idx", "band"),
     )
-    from ..functions.minhash import cap_buckets
+    from ..operators.neardup import bucket_pairs
 
-    bands = cap_buckets(bands, ["band_idx", "band"], SIMHASH_MAX_BUCKET)
-    l = bands.select("band_idx", "band", F.col("doc_id").alias("a"),
-                     F.col("sig_hi").alias("ha_hi"),
-                     F.col("sig_lo").alias("ha_lo"))
-    r = bands.select("band_idx", "band", F.col("doc_id").alias("b"),
-                     F.col("sig_hi").alias("hb_hi"),
-                     F.col("sig_lo").alias("hb_lo"))
-    ham = ("cast(bit_count(ha_hi ^ hb_hi) + bit_count(ha_lo ^ hb_lo)"
-           " as int)")
-    return (
-        l.join(r, ["band_idx", "band"])
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("hamming", F.expr(ham))
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
-        .select("a", "b", "hamming")
-        .distinct()
+    ham = ("cast(bit_count(sig_hi_a ^ sig_hi_b)"
+           " + bit_count(sig_lo_a ^ sig_lo_b) as int)")
+    return bucket_pairs(
+        bands, ["band_idx", "band"], "doc_id", SIMHASH_MAX_BUCKET,
+        carry=["sig_hi", "sig_lo"],
+        verify=lambda cand: (
+            cand.withColumn("hamming", F.expr(ham))
+            .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
+            .select("a", "b", "hamming")
+        ),
     )
 
 
@@ -1578,7 +1462,7 @@ def q_ann_lsh_bucketed(spark, sf_dir):
     key; brute force stays per-bucket, and buckets over
     SIGN_LSH_MAX_BUCKET members are dropped (observed via cap_buckets)
     before the self-join."""
-    from ..functions.minhash import cap_buckets
+    from ..operators.neardup import cap_buckets
 
     e = _load(spark, sf_dir, "embeddings")
     bits = _sign_lsh_bits(e.count())
@@ -1679,32 +1563,29 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     # would re-run the mutant transform in an extra full pass (review
     # finding); the dup corpus is exactly 2× the base by construction
     e = e.unionByName(mutant)
-    from ..functions.minhash import cap_buckets
+    from ..operators.neardup import bucket_pairs
 
     bits = _sign_lsh_bits(2 * n_base)
-    eb = e.select("vec_id", "embedding",
-                  _sign_bucket_expr(bits).alias("bucket"))
-    eb = cap_buckets(eb, ["bucket"], SIGN_LSH_MAX_BUCKET)
     # per-vector norm once (float-identical to the fused per-pair HOF it
-    # replaces) + unrolled codegen dot when the dim is known — same
-    # rewrite as q_ann_lsh_bucketed, same bit-identical-order argument
+    # replaces) — same rewrite as q_ann_lsh_bucketed, same
+    # bit-identical-order argument
     nrm = ("sqrt(aggregate(embedding, cast(0.0 as double),"
            " (acc, v) -> acc + cast(v as double) * cast(v as double)))")
-    eb = eb.withColumn("nrm", F.expr(nrm))
-    l = eb.select("bucket", F.col("vec_id").alias("a"),
-                  F.col("embedding").alias("ea"), F.col("nrm").alias("na"))
-    r = eb.select("bucket", F.col("vec_id").alias("b"),
-                  F.col("embedding").alias("eb"), F.col("nrm").alias("nb"))
-    dot = ("aggregate(zip_with(ea, eb,"
+    eb = e.select("vec_id", "embedding",
+                  _sign_bucket_expr(bits).alias("bucket"),
+                  F.expr(nrm).alias("nrm"))
+    dot = ("aggregate(zip_with(embedding_a, embedding_b,"
            " (x, y) -> cast(x as double) * cast(y as double)),"
            " cast(0.0 as double), (acc, v) -> acc + v)")
-    cos = f"{dot} / (na * nb)"
-    return (
-        l.join(r, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cos_sim", F.round(F.expr(cos), 6))
-        .filter(F.col("cos_sim") >= 0.9)
-        .select("a", "b", "cos_sim")
+    cos = f"{dot} / (nrm_a * nrm_b)"
+    return bucket_pairs(
+        eb, ["bucket"], "vec_id", SIGN_LSH_MAX_BUCKET,
+        carry=["embedding", "nrm"],
+        verify=lambda cand: (
+            cand.withColumn("cos_sim", F.round(F.expr(cos), 6))
+            .filter(F.col("cos_sim") >= 0.9)
+            .select("a", "b", "cos_sim")
+        ),
     )
 
 

@@ -24,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.manifest import is_path_not_found
 from ..operators.stages import (
     dedup_docs,
     extract_stage,
@@ -64,8 +65,7 @@ def _process_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
         # only a genuinely-missing table may be swallowed (first batch);
         # any other read failure silently disabling the dedup would
         # re-ingest history as duplicates
-        msg = str(e)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
+        if not is_path_not_found(e):
             raise
         prior = None
     if prior is not None:

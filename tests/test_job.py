@@ -188,3 +188,25 @@ def test_prune_drops_unbacked_graphs(spark, warehouse, capsys, tmp_path):
     assert rep["pruned"] == before_count - after.count() > 0
     # structural org graphs survive
     assert any(g.endswith(":org") for g in got_graphs)
+
+
+def test_show_recovers_interrupted_prune_swap(spark, warehouse, capsys,
+                                              tmp_path):
+    """A prune that crashed between its two renames leaves `triples`
+    missing and the data at `triples.pruned-old`; every warehouse
+    command, not just prune, restores the table before it runs."""
+    import shutil as _sh
+
+    src, _ = warehouse
+    out = str(tmp_path / "mid_swap")
+    _sh.copytree(src, out)
+    final = os.path.join(out, "triples")
+    os.replace(final, os.path.join(out, "triples.pruned-old"))
+    row = spark.read.parquet(os.path.join(out, "docs")).select(
+        "doc_sha1").first()
+    rc = job.main(["show", "--out", out, "--sha", row.doc_sha1[:12],
+                   "--cores", "4"])
+    assert rc == 0 and row.doc_sha1 in capsys.readouterr().out
+    assert os.path.isdir(final)
+    assert not os.path.exists(os.path.join(out, "triples.pruned-old"))
+    assert spark.read.parquet(final).count() > 0

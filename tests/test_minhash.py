@@ -8,25 +8,51 @@ import pytest
 from pyspark.sql import functions as F
 
 from gleaner_spark.core.text import md5_minhash_signature
-from gleaner_spark.functions.minhash import minhash_frame
+from gleaner_spark.operators import neardup
+from gleaner_spark.operators.neardup import minhash_signature
 
 
-def test_minhash_empty_shingles_get_sentinel(spark):
+def _shingle_rows(df):
+    return df.select("id", F.explode_outer("shingles").alias("s"))
+
+
+def test_minhash_empty_shingles_get_sentinel(spark, monkeypatch):
+    """Both signature paths keep empty/null shingle sets and give them
+    the md5('') sentinel signature: the exploded path as the reference's
+    hex strings, the rank path as ranks in the same order."""
     df = spark.createDataFrame(
-        [(1, ["abc", "def"]), (2, []), (3, None)],
+        [(1, ["abc", "def"]), (2, []), (3, None), (4, ["xyz"])],
         "id long, shingles array<string>",
     )
-    got = {r.id: list(r.mh) for r in minhash_frame(df, ["id"], k=4).collect()}
-    assert set(got) == {1, 2, 3}  # empty/null rows are KEPT
-    assert got[2] == md5_minhash_signature([], 4)
-    assert got[3] == md5_minhash_signature([], 4)
-    assert got[1] == md5_minhash_signature(["abc", "def"], 4)
+    want = {1: md5_minhash_signature(["abc", "def"], 4),
+            2: md5_minhash_signature([], 4),
+            3: md5_minhash_signature([], 4),
+            4: md5_minhash_signature(["xyz"], 4)}
+
+    def sig(frame):
+        return {r.id: [r[f"m{i}"] for i in range(4)]
+                for r in frame.collect()}
+
+    ranks = sig(minhash_signature(_shingle_rows(df), "id", k=4))
+    monkeypatch.setattr(neardup, "SIG_DICT_MAX_SHINGLES", 0)
+    hexes = sig(minhash_signature(_shingle_rows(df), "id", k=4))
+    assert hexes == want  # empty/null rows are KEPT, with the sentinel
+    assert set(ranks) == set(want)
+    for i in range(4):
+        for x in want:
+            for y in want:
+                assert ((ranks[x][i] < ranks[y][i])
+                        == (want[x][i] < want[y][i]))
+                assert ((ranks[x][i] == ranks[y][i])
+                        == (want[x][i] == want[y][i]))
 
 
 def test_minhash_k_limit_enforced(spark):
     df = spark.createDataFrame([(1, ["a"])], "id long, shingles array<string>")
     with pytest.raises(ValueError, match="1..16"):
-        minhash_frame(df, ["id"], k=17)
+        minhash_signature(_shingle_rows(df), "id", k=17)
+    with pytest.raises(ValueError, match="1..16"):
+        neardup.minhash_from_rows(_shingle_rows(df), "id", k=17)
     with pytest.raises(ValueError, match="1..16"):
         md5_minhash_signature(["a"], 17)
     from gleaner_spark.plans.queries import _minhash_sql
@@ -234,7 +260,7 @@ def test_sign_lsh_bucket_cap_drops_hot_bucket(spark):
     not self-join quadratically — the hot bucket is dropped."""
     from pyspark.sql import functions as F
 
-    from gleaner_spark.functions.minhash import cap_buckets
+    from gleaner_spark.operators.neardup import cap_buckets
 
     n = 50
     eb = spark.range(n).select(
@@ -320,7 +346,7 @@ def test_lsh_params_threshold_driven_band_selection():
     (S-curve fp+fn area minimization), uses every paid-for hash
     (b*r == k), and is monotone: higher thresholds -> more rows per
     band (sharper curve)."""
-    from gleaner_spark.functions.minhash import lsh_params
+    from gleaner_spark.operators.neardup import lsh_params
 
     assert lsh_params(0.7, 16) == (4, 4)   # the registry query's setting
     assert lsh_params(0.3, 16) == (8, 2)

@@ -4,6 +4,7 @@ oracle, dedup, stats, resume, and entity-linking gold clusters.
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -280,17 +281,66 @@ def test_resume_skips_completed_urls(spark, tmp_path):
     out = str(tmp_path / "resume")
     src = gen_sources_spark(spark)
     first = gen_pages_spark(spark, 40, 4)
-    cfg = PipelineConfig(output_dir=out, run_id="r1", link_entities=False,
-                         write_stats=False)
+    cfg = PipelineConfig(output_dir=out, run_id="r1", link_entities=False)
     run_pipeline(spark, first, src, cfg)
 
     # second run over a superset: only the 20 new urls flow through
     superset = gen_pages_spark(spark, 60, 4)
     cfg2 = PipelineConfig(output_dir=out, run_id="r2", mode="diff",
-                          link_entities=False, write_stats=False)
+                          link_entities=False)
     result = run_pipeline(spark, superset, src, cfg2)
     assert result.resumed_urls_skipped == 40
     assert result.blocks.select("url").distinct().count() == 20
+
+
+def test_diff_run_fails_loudly_on_unreadable_state(spark, tmp_path):
+    """Diff mode treats only a MISSING manifest / docs table as "no prior
+    state".  An unreadable one (a stray directory that breaks partition
+    discovery, a table that is not parquet) raises instead of silently
+    reprocessing every page or turning cross-run dedup off; with no manifest at all a diff
+    run behaves like a full run."""
+    import shutil
+
+    src = gen_sources_spark(spark)
+    pages = gen_pages_spark(spark, 40, 4)
+    full = str(tmp_path / "full")
+    run_pipeline(spark, pages, src, PipelineConfig(
+        output_dir=full, run_id="f", link_entities=False))
+
+    def stray_dir(table_dir):
+        spark.range(1).write.parquet(os.path.join(table_dir, "junk", "x"))
+
+    def garbage(table_dir):
+        shutil.rmtree(table_dir)
+        with open(table_dir, "w") as f:
+            f.write("not parquet")
+
+    for table, corrupt, err in (
+        ("manifest", stray_dir, "CONFLICTING_DIRECTORY_STRUCTURES"),
+        ("docs", garbage, "not a Parquet file"),
+    ):
+        wh = str(tmp_path / f"bad_{table}")
+        shutil.copytree(full, wh)
+        corrupt(os.path.join(wh, table))
+        with pytest.raises(Exception, match=err):
+            run_pipeline(spark, pages, src, PipelineConfig(
+                output_dir=wh, run_id="d", mode="diff",
+                link_entities=False))
+
+    fresh = str(tmp_path / "fresh")
+    res = run_pipeline(spark, pages, src, PipelineConfig(
+        output_dir=fresh, run_id="d", mode="diff", link_entities=False))
+    assert res.resumed_urls_skipped is None
+    assert res.blocks.select("url").distinct().count() == 40
+
+    def triples(wh):
+        # org graphs are written by full runs only, by design
+        return sorted(tuple(r) for r in spark.read.parquet(
+            os.path.join(wh, "triples"))
+            .filter(~F.col("graph").endswith(":org"))
+            .select("subject", "predicate", "object", "graph").collect())
+
+    assert triples(fresh) == triples(full)
 
 
 def test_connected_components_shapes(spark):

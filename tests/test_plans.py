@@ -224,7 +224,7 @@ def test_sign_lsh_bits_scale_with_corpus(spark):
     the cap as a constant width would."""
     from pyspark.sql import functions as F
 
-    from gleaner_spark.functions.minhash import cap_buckets
+    from gleaner_spark.operators.neardup import cap_buckets
     from gleaner_spark.plans.queries import (
         SIGN_LSH_MAX_BUCKET, _sign_bucket_expr, _sign_lsh_bits,
     )
@@ -495,21 +495,26 @@ def test_simhash_pairs_algebra_handles_empty_and_whitespace(spark, tmp_path):
     assert got_pairs == want
 
 
-def test_minhash_lsh_rank_path_matches_python_reference(spark, tmp_path):
-    """The int-rank signature encoding must produce the exact pair set
-    of the md5-string reference (core.text.md5_minhash_signature +
-    identical banding and bucket cap) on a random corpus."""
+def test_minhash_lsh_rank_path_matches_python_reference(spark, tmp_path,
+                                                         monkeypatch):
+    """The near-dup kernel (operators/neardup.py) must produce the exact
+    pair set of the md5-string reference (core.text.md5_minhash_signature
+    + identical banding and bucket cap) on a random corpus: through the
+    query on both signature paths (int ranks, and the exploded md5 rows
+    when the dictionary gate is forced to 0), and through the kernel
+    directly at band widths 2 and 4.  70 copies of one text make buckets
+    over the cap, so the cap is checked too."""
+    from pyspark.sql import Observation
+
     from gleaner_spark.core.text import md5_minhash_signature
+    from gleaner_spark.operators import neardup
     from gleaner_spark.plans.queries import (
-        LSH_BAND, LSH_BANDS, LSH_MAX_BUCKET, NUM_MINHASH,
+        LSH_BAND, LSH_MAX_BUCKET, NUM_MINHASH,
     )
 
     rows = _random_texts(80, seed=23)
+    rows += [(80 + i, rows[0][1]) for i in range(70)]
     sf = _mk_docs_dir(spark, tmp_path, rows)
-    got = {
-        (r.a, r.b)
-        for r in QUERIES["dedup_minhash_lsh"][0](spark, sf).collect()
-    }
 
     def shingle_list(text):
         toks = " ".join(text.lower().split()).split(" ")
@@ -521,17 +526,44 @@ def test_minhash_lsh_rank_path_matches_python_reference(spark, tmp_path):
         i + 100000: shingle_list(t + " extra near dup token")
         for i, t in rows
     })
-    buckets = {}
-    for doc, sh in sorted(docs.items()):
-        sig = md5_minhash_signature(sh, NUM_MINHASH)
-        for b in range(LSH_BANDS):
-            key = (b, "|".join(sig[b * LSH_BAND:(b + 1) * LSH_BAND]))
-            buckets.setdefault(key, []).append(doc)
-    want = set()
-    for members in buckets.values():
-        if len(members) > LSH_MAX_BUCKET:
-            continue
-        for i in range(len(members)):
-            for k in range(i + 1, len(members)):
-                want.add(tuple(sorted((members[i], members[k]))))
-    assert got == want
+    sigs = {doc: md5_minhash_signature(sh, NUM_MINHASH)
+            for doc, sh in docs.items()}
+
+    def reference(width):
+        buckets = {}
+        for doc, sig in sorted(sigs.items()):
+            for b in range(NUM_MINHASH // width):
+                key = (b, "|".join(sig[b * width:(b + 1) * width]))
+                buckets.setdefault(key, []).append(doc)
+        assert max(len(m) for m in buckets.values()) > LSH_MAX_BUCKET
+        want = set()
+        for members in buckets.values():
+            if len(members) > LSH_MAX_BUCKET:
+                continue
+            for i in range(len(members)):
+                for k in range(i + 1, len(members)):
+                    want.add(tuple(sorted((members[i], members[k]))))
+        return want
+
+    def query_pairs():
+        return {(r.a, r.b)
+                for r in QUERIES["dedup_minhash_lsh"][0](spark, sf).collect()}
+
+    want4 = reference(LSH_BAND)
+    assert (0, 80) not in want4  # the capped copies pair with nobody
+    assert query_pairs() == want4
+
+    shingle_rows = spark.createDataFrame(
+        [(doc, s) for doc, sh in docs.items() for s in sh],
+        "doc_id long, s string",
+    )
+    sig = neardup.minhash_signature(shingle_rows, "doc_id")
+    for width in (2, 4):
+        obs = Observation(f"cap{width}")
+        got = {(r.a, r.b) for r in neardup.minhash_lsh_pairs(
+            sig, "doc_id", width, LSH_MAX_BUCKET, observation=obs).collect()}
+        assert got == reference(width), width
+        assert obs.get["dropped_buckets"] > 0
+
+    monkeypatch.setattr(neardup, "SIG_DICT_MAX_SHINGLES", 0)
+    assert query_pairs() == want4
