@@ -1,8 +1,9 @@
 """Near-duplicate blocking: the one home of MinHash signatures, LSH
 banding and the capped bucket self-join.
 
-Callers: the pipeline's entity linker (``operators.link``) and the
-registry's ``dedup_minhash_lsh``, ``dedup_simhash_pairs`` and
+Callers: the pipeline's entity linker (``operators.link``, distributed
+or, below its mention gate, driver-local) and the registry's
+``dedup_minhash_lsh``, ``dedup_simhash_pairs`` and
 ``dedup_embedding_cosine`` (``plans.queries``); ``ann_lsh_bucketed``
 uses only the bucket cap.
 
@@ -29,12 +30,18 @@ Buckets only test EQUALITY of signature values, so both paths give the
 same buckets, caps and pairs as the md5 hex strings.  Band keys are the
 band index plus that band's signature columns — no string
 concatenation, any band width that divides k.
+
+:func:`local_minhash_signatures` and :func:`local_lsh_pairs` are the
+same signatures (as md5 hex), banding, cap and pair enumeration over
+in-memory sets, for callers that measured their input small enough to
+solve on the driver (the linker below its mention gate).
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Sequence
+from itertools import combinations
+from typing import Callable, Collection, Hashable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
@@ -227,3 +234,54 @@ def minhash_lsh_pairs(sig: DataFrame, id_col: str, band_width: int,
     keys = ["bi", *[f"b{j}" for j in range(band_width)]]
     return bucket_pairs(rows, keys, id_col, max_bucket, carry=carry,
                         verify=verify, observation=observation)
+
+
+def local_minhash_signatures(shingle_sets: Mapping[Hashable, Collection[str]],
+                             k: int = NUM_HASHES) -> dict:
+    """Driver-local twin of :func:`minhash_signature`: id → the k
+    rotation-md5 minima of its shingle set, value for value what
+    ``core.text.md5_minhash_signature`` returns.  Each distinct shingle
+    is hashed and rotated once (names share most of their 3-grams, and
+    the reference re-hashes per set), and each signature is k mins over
+    the transposed rotation tuples."""
+    _check_k(k)
+    rots: dict = {}
+
+    def rotations(s: str) -> tuple:
+        r = rots.get(s)
+        if r is None:
+            h = hashlib.md5(s.encode("utf-8")).hexdigest()
+            r = rots[s] = tuple(h[2 * i:] + h[:2 * i] for i in range(k))
+        return r
+
+    return {ident: tuple(map(min, zip(*map(rotations, sh or ("",)))))
+            for ident, sh in shingle_sets.items()}
+
+
+def local_lsh_pairs(sigs: Mapping[Hashable, Sequence], band_width: int,
+                    max_bucket: int = MAX_BUCKET, *, k: int = NUM_HASHES
+                    ) -> tuple[set, int, int]:
+    """Driver-local twin of :func:`minhash_lsh_pairs` for inputs small
+    enough to hold in memory: ``sigs`` maps id → k signature values
+    (e.g. ``core.text.md5_minhash_signature``), banded the same way
+    (bucket key = band index + that band's values), buckets over
+    ``max_bucket`` members dropped.  Returns (distinct ordered pairs
+    (a < b), dropped_buckets, total_buckets) — the pairs before any
+    verification, and the counts the distributed ``Observation``
+    reports."""
+    if band_width < 1 or k % band_width:
+        raise ValueError(f"band width {band_width} does not divide k={k}")
+    buckets: dict = {}
+    for ident, sig in sigs.items():
+        for b in range(k // band_width):
+            key = (b, *sig[b * band_width:(b + 1) * band_width])
+            buckets.setdefault(key, []).append(ident)
+    pairs: set = set()
+    dropped = 0
+    for members in buckets.values():
+        if len(members) > max_bucket:
+            dropped += 1
+            continue
+        for a, b in combinations(members, 2):
+            pairs.add((a, b) if a < b else (b, a))
+    return pairs, dropped, len(buckets)

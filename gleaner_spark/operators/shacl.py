@@ -842,13 +842,17 @@ def shape_validation_report(
             .distinct()
         )
         # every join constraint of this shape re-reads base (and the
-        # final union re-optimizes each occurrence): materialize the
-        # semi-join ONCE per shape so the ~len(join_cs) frames become
-        # shallow filters over a barrier instead of repeated join
-        # subtrees — at config scale this halves catalyst time per
-        # action; at data scale it avoids recomputing the target
-        # semi-join per constraint.
-        base = reliable_ckpt(triples.join(targets, "subject", "left_semi"))
+        # final union re-optimizes each occurrence): with more than one,
+        # barrier the semi-join so the len(join_cs) frames become shallow
+        # filters over it instead of repeated join subtrees — at config
+        # scale this halves catalyst time per action; at data scale it
+        # avoids recomputing the target semi-join per constraint.  The
+        # barrier is lazy, so shapes with at most one join constraint add
+        # no Spark job to building the report (under AQE a lazy
+        # checkpoint still runs the semi-join's shuffle stages).
+        base = triples.join(targets, "subject", "left_semi")
+        if len(join_cs) > 1:
+            base = reliable_ckpt(base, eager=False)
         for c in join_cs:
             on_path = base.filter(F.col("predicate") == f"<{c.path}>")
             if c.or_alternatives:

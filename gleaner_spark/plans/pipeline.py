@@ -14,45 +14,14 @@ from __future__ import annotations
 
 import logging
 import os
-import sys
-import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..obs import timed
+
 logger = logging.getLogger(__name__)
 
-
-@contextmanager
-def _timed(stage: str):
-    """Opt-in stage timing (GLEANER_STAGE_TIMING=1): wall seconds per
-    pipeline stage to stderr — the first tool to reach for when a run's
-    CPU utilization looks wrong."""
-    if os.environ.get("GLEANER_STAGE_TIMING") != "1":
-        yield
-        return
-
-    def snap() -> tuple[int, int]:
-        try:
-            with open("/proc/stat") as f:
-                txt = f.read()
-            v = list(map(int, txt.split("\n")[0].split()[1:]))
-            busy = sum(v) - v[3] - v[4]
-            forks = int(txt.split("processes")[1].split()[0])
-            return busy, forks
-        except Exception:
-            return 0, 0
-
-    t0, (b0, f0) = time.time(), snap()
-    yield
-    b1, f1 = snap()
-    hz = os.sysconf("SC_CLK_TCK")
-    print(
-        f"[stage] {stage}: {time.time() - t0:.1f}s"
-        f" core_s={(b1 - b0) / hz:.0f} forks={f1 - f0}",
-        file=sys.stderr, flush=True,
-    )
 
 class _AsyncWrites:
     """ONE background thread draining an ordered queue of bookkeeping
@@ -310,12 +279,12 @@ def _run_pipeline(
     # handful of 64 MB files whose row groups bound downstream UDF
     # parallelism at ~8 tasks.  Only the query-facing triples table is
     # source-partitioned (partition pruning is worth it there).
-    with _timed("extract"):
+    with timed("extract"):
         blocks = _persist(extract_stage(pages), base, "blocks", None,
                           write_mode, cat)
 
     def _extract_bookkeeping():
-        with _timed("extract.manifest+lineage"):
+        with timed("extract.manifest+lineage"):
             mf.write_manifest(
                 mf.build_extract_manifest(blocks, cfg.run_id), base
             )
@@ -328,7 +297,7 @@ def _run_pipeline(
     # S2 normalize — persist the full per-block result ONCE (valid +
     # invalid rows); dedup and stats both derive from the read-back, so
     # the expensive pyld UDF runs exactly one pass over the data
-    with _timed("normalize"):
+    with timed("normalize"):
         docs_all = _persist(normalize_stage(blocks), base, "processed",
                             None, write_mode, cat)
     docs = dedup_docs(docs_all)
@@ -348,11 +317,11 @@ def _run_pipeline(
             prior = None
         if prior is not None:
             docs = docs.join(prior.select("doc_sha1"), "doc_sha1", "left_anti")
-    with _timed("dedup"):
+    with timed("dedup"):
         docs = _persist(docs, base, "docs", None, write_mode, cat)
 
     def _docs_bookkeeping():
-        with _timed("dedup.manifest+lineage"):
+        with timed("dedup.manifest+lineage"):
             mf.write_manifest(mf.build_docs_manifest(docs, cfg.run_id), base)
             partition_lineage(docs, cfg.run_id, "normalize").write.mode(
                 "append"
@@ -384,7 +353,7 @@ def _run_pipeline(
     # relation ~5 times (mention scan, type scan, subject/object
     # rewrites, union) and re-decompressing parquet per scan measured
     # 2.5× slower than memory-resident scans.
-    with _timed("mill"):
+    with timed("mill"):
         triples = _persist(triples, base, "raw_triples", None, write_mode,
                            cat)
 
@@ -392,23 +361,23 @@ def _run_pipeline(
     raw_cached = None
     if cfg.link_entities:
         raw_cached = triples = triples.persist()
-        with _timed("link"):
+        with timed("link"):
             triples = link_stage(triples)
 
     # S5 materialize
-    with _timed("materialize"):
+    with timed("materialize"):
         triples = _persist(materialize_triples(triples), base, "triples",
                            ["source"], write_mode, cat)
     if raw_cached is not None:
         raw_cached.unpersist()
 
     def _materialize_bookkeeping():
-        with _timed("materialize.lineage"):
+        with timed("materialize.lineage"):
             partition_lineage(triples, cfg.run_id, "materialize").write.mode(
                 "append"
             ).parquet(os.path.join(base, "lineage"))
         # R5 prov lineage rows
-        with _timed("prov"):
+        with timed("prov"):
             prov_lineage(docs.filter(F.col("valid")), sources_dim,
                          cfg.run_id, cfg.bucket).write.mode(
                 write_mode
@@ -419,13 +388,13 @@ def _run_pipeline(
     stats = run_stats(blocks, docs_all)
 
     def _stats_bookkeeping():
-        with _timed("stats"):
+        with timed("stats"):
             _write(stats, base, "stats", cat=cat)
 
     aw.submit(_stats_bookkeeping)
 
     # everything bookkeeping is durable (or raised) before we return
-    with _timed("bookkeeping.join"):
+    with timed("bookkeeping.join"):
         aw.join()
 
     return PipelineResult(

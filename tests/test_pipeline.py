@@ -543,14 +543,16 @@ def test_iceberg_branch_selection(spark, tmp_path, monkeypatch):
     assert pl.iceberg_catalog(spark) is None
 
 
-def test_entity_linking_labeled_precision_recall(spark):
+def test_entity_linking_labeled_precision_recall(spark, monkeypatch):
     """VERDICT r3 #9: end-to-end sameas_map P/R on a LABELED corpus —
     gold clusters of name variants (case / punctuation / 'Inc' suffix)
     plus digit-token near-collision decoys ('Survey Station 01' vs
     '... 02') that must never merge.  Pair-level precision and recall
-    must both clear the north-rule 0.95 bar."""
+    must both clear the north-rule 0.95 bar, on the driver-local path
+    and on the distributed one (mention gate forced to 0)."""
     import itertools
 
+    from gleaner_spark.operators import link
     from gleaner_spark.operators.link import sameas_map
 
     bases = [
@@ -583,13 +585,6 @@ def test_entity_linking_labeled_precision_recall(spark):
         rows, "subject string, predicate string, object string, graph string"
     )
 
-    canon = {r.entity: r.canonical for r in sameas_map(triples).collect()}
-    predicted: dict[str, list[str]] = {}
-    gold: dict[str, list[str]] = {}
-    for g, e, _ in mentions:
-        predicted.setdefault(canon.get(e, e), []).append(e)
-        gold.setdefault(g, []).append(e)
-
     def pairs(clusters):
         return {
             frozenset(p)
@@ -597,12 +592,147 @@ def test_entity_linking_labeled_precision_recall(spark):
             for p in itertools.combinations(sorted(members), 2)
         }
 
-    got, want = pairs(predicted), pairs(gold)
-    tp = len(got & want)
-    precision = tp / len(got) if got else 1.0
-    recall = tp / len(want) if want else 1.0
-    assert precision >= 0.95, f"precision {precision}: extra {got - want}"
-    assert recall >= 0.95, f"recall {recall}: missed {want - got}"
+    gold: dict[str, list[str]] = {}
+    for g, e, _ in mentions:
+        gold.setdefault(g, []).append(e)
+    want = pairs(gold)
+    for path, gate in (("local", link.LOCAL_LINK_MAX_MENTIONS),
+                       ("distributed", 0)):
+        monkeypatch.setattr(link, "LOCAL_LINK_MAX_MENTIONS", gate)
+        canon = {r.entity: r.canonical
+                 for r in sameas_map(triples).collect()}
+        predicted: dict[str, list[str]] = {}
+        for g, e, _ in mentions:
+            predicted.setdefault(canon.get(e, e), []).append(e)
+        got = pairs(predicted)
+        tp = len(got & want)
+        precision = tp / len(got) if got else 1.0
+        recall = tp / len(want) if want else 1.0
+        assert precision >= 0.95, (path, precision, got - want)
+        assert recall >= 0.95, (path, recall, want - got)
+
+
+_T = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+_NAME = "<https://schema.org/name>"
+_ORG = "<https://schema.org/Organization>"
+
+
+def _org_rows(named):
+    """(subject, predicate, object, graph) rows typing each entity as an
+    Organization and giving it its schema:name."""
+    rows = []
+    for e, name in named:
+        rows.append((e, _T, _ORG, "urn:g"))
+        rows.append((e, _NAME, f'"{name}"', "urn:g"))
+    return rows
+
+
+def _sameas_rows(triples):
+    from gleaner_spark.operators.link import sameas_map
+
+    return sorted(tuple(r) for r in sameas_map(triples).collect())
+
+
+def test_sameas_local_matches_distributed_on_heavy_pages(spark, monkeypatch):
+    """The driver-local sameAs map must equal the distributed one row
+    for row (duplicates included) on milled heavy pages plus
+    digit-token decoys: near-identical names that differ only in a
+    number ('ACME Research Institute 01' vs '... 02') and must stay
+    apart, and an alias of one gold org carrying two names."""
+    from gleaner_spark.operators import link
+
+    pages = gen_pages_spark(spark, 120, 8, profile="heavy")
+    src = gen_sources_spark(spark)
+    milled = mill_stage(
+        dedup_docs(normalize_stage(extract_stage(with_source(pages, src))))
+    ).select("subject", "predicate", "object", "graph")
+    decoys = [(f"<https://ex.org/decoy/{k}/{j}>",
+               f"ACME Research Institute {k:02d}")
+              for k in range(1, 6) for j in range(2)]
+    decoys += [("<https://ex.org/two-names>", "Polar Science Centre"),
+               ("<https://ex.org/two-names>", "Global Geo-Survey")]
+    triples = milled.unionByName(spark.createDataFrame(
+        _org_rows(decoys), "subject string, predicate string, "
+        "object string, graph string")).localCheckpoint(eager=True)
+
+    local = _sameas_rows(triples)
+    monkeypatch.setattr(link, "LOCAL_LINK_MAX_MENTIONS", 0)
+    distributed = _sameas_rows(triples)
+    assert local == distributed
+    canon = dict(local)
+    # every decoy pair collapses onto its own member, never across digits
+    for k in range(1, 6):
+        a, b = (f"<https://ex.org/decoy/{k}/{j}>" for j in range(2))
+        assert canon.get(b, b) == canon.get(a, a)
+        assert canon.get(a, a).startswith(f"<https://ex.org/decoy/{k}/")
+    assert len(local) > 100
+
+
+@pytest.mark.parametrize("path", ["local", "distributed"])
+def test_sameas_bucket_cap_drops_and_counts(spark, monkeypatch, caplog, path):
+    """70 distinct names with one shingle set ('aaa', 'aaaa', ...) share
+    every LSH bucket: each of the 8 band buckets exceeds MAX_BUCKET and
+    is dropped — so none of them links although their Jaccard is 1 —
+    and the drop is counted and logged on both paths.  A true variant
+    pair elsewhere still links."""
+    import logging
+    import re
+
+    from gleaner_spark.operators import link
+    from gleaner_spark.operators.neardup import MAX_BUCKET
+
+    if path == "distributed":
+        monkeypatch.setattr(link, "LOCAL_LINK_MAX_MENTIONS", 0)
+    hot = [(f"<https://ex.org/a/{n}>", "a" * n) for n in range(3, 73)]
+    assert len(hot) > MAX_BUCKET
+    pair = [("<https://ex.org/o/1>", "Ocean Data Consortium"),
+            ("<https://ex.org/o/2>", "Ocean Data Consortium Inc")]
+    triples = spark.createDataFrame(
+        _org_rows(hot + pair),
+        "subject string, predicate string, object string, graph string")
+    with caplog.at_level(logging.WARNING, logger=link.__name__):
+        rows = _sameas_rows(triples)
+    assert rows == [("<https://ex.org/o/2>", "<https://ex.org/o/1>")]
+    msgs = [r.getMessage() for r in caplog.records
+            if "LSH bucket cap dropped" in r.getMessage()]
+    assert len(msgs) == 1, msgs
+    dropped, total = map(int, re.search(
+        r"dropped (\d+) of (\d+) buckets", msgs[0]).groups())
+    # 8 hot buckets (one per band) + the pair's 16 band memberships,
+    # which make 8 (every band shared) to 16 (none shared) more
+    assert dropped == 8 and 8 + 8 <= total <= 8 + 16, (dropped, total)
+
+
+def test_link_stage_job_count_guard(spark):
+    """Below the mention gate the link stage runs a handful of Spark
+    jobs (the mention barrier and one collect), not the distributed
+    path's ~40 (signature barriers, dictionary collect, bucket
+    self-join, CC barrier, map barrier and its size agg).  A regression
+    to the distributed path at this size fails here."""
+    from gleaner_spark.operators import link
+
+    named = [(f"<https://ex.org/e/{c}/{j}>", alias)
+             for c, aliases in enumerate(ORG_CLUSTERS)
+             for j, alias in enumerate(aliases)]
+    triples = spark.createDataFrame(
+        [(s, p, o, g, "src") for s, p, o, g in _org_rows(named)],
+        "subject string, predicate string, object string, graph string,"
+        " source string").localCheckpoint(eager=True)
+    assert link.LOCAL_LINK_MAX_MENTIONS >= len(named)
+    sc = spark.sparkContext
+    group = "link-stage-job-guard"
+    sc.setJobGroup(group, "link_stage")
+    try:
+        linked = link.link_stage(triples)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # measured on this fixture: 5 jobs below the gate, 38 with the gate
+    # forced to 0 (the distributed path)
+    assert 1 <= jobs <= 7, jobs
+    subs = {r.subject for r in linked.filter(
+        (F.col("predicate") == _NAME) & (F.col("source") == "src")).collect()}
+    assert len(subs) == len(ORG_CLUSTERS)
 
 
 def test_async_writes_join_raises_and_abort_swallows(caplog):
@@ -716,10 +846,10 @@ def test_cc_ckpt_every_k_identical_labels(spark):
                                   + [(999,)], "entity long")
     base = None
     for k in (1, 2, 3):
+        obs: dict = {}
         out = connected_components(edges, vertices=verts, ckpt_every=k,
-                                   local_max_edges=0)
+                                   local_max_edges=0, observation=obs)
         got = sorted((r.entity, r.component) for r in out.collect())
-        obs = out._cc_observation
         assert obs["ckpt_every"] == k and obs["checkpoints"] >= 1
         assert obs["rounds"] >= obs["checkpoints"]
         if base is None:
@@ -743,10 +873,12 @@ def test_cc_local_fast_path_matches_distributed(spark):
     rng = random.Random(41)
     rows = [(rng.randint(0, 300), rng.randint(0, 300)) for _ in range(400)]
     edges = spark.createDataFrame(rows, "a long, b long")
-    local = connected_components(edges)
-    dist = connected_components(edges, local_max_edges=0)
+    obs_l: dict = {}
+    obs_d: dict = {}
+    local = connected_components(edges, observation=obs_l)
+    dist = connected_components(edges, local_max_edges=0, observation=obs_d)
     got_l = sorted((r.entity, r.component) for r in local.collect())
     got_d = sorted((r.entity, r.component) for r in dist.collect())
     assert got_l == got_d
-    assert local._cc_observation.get("local_solve_edges", 0) > 0
-    assert dist._cc_observation["rounds"] > 0
+    assert obs_l.get("local_solve_edges", 0) > 0
+    assert obs_d["rounds"] > 0 and "local_solve_edges" not in obs_d

@@ -502,8 +502,10 @@ def test_minhash_lsh_rank_path_matches_python_reference(spark, tmp_path,
     + identical banding and bucket cap) on a random corpus: through the
     query on both signature paths (int ranks, and the exploded md5 rows
     when the dictionary gate is forced to 0), and through the kernel
-    directly at band widths 2 and 4.  70 copies of one text make buckets
-    over the cap, so the cap is checked too."""
+    directly at band widths 2 and 4 — distributed, and driver-local
+    (``local_lsh_pairs`` over the md5 reference signatures).  70 copies
+    of one text make buckets over the cap, so the cap and its counts are
+    checked too."""
     from pyspark.sql import Observation
 
     from gleaner_spark.core.text import md5_minhash_signature
@@ -558,12 +560,20 @@ def test_minhash_lsh_rank_path_matches_python_reference(spark, tmp_path,
         "doc_id long, s string",
     )
     sig = neardup.minhash_signature(shingle_rows, "doc_id")
+    assert neardup.local_minhash_signatures(docs) == {
+        doc: tuple(s) for doc, s in sigs.items()}
     for width in (2, 4):
         obs = Observation(f"cap{width}")
         got = {(r.a, r.b) for r in neardup.minhash_lsh_pairs(
             sig, "doc_id", width, LSH_MAX_BUCKET, observation=obs).collect()}
         assert got == reference(width), width
         assert obs.get["dropped_buckets"] > 0
+        # the driver-local banding over the md5 reference signatures
+        local, dropped, total = neardup.local_lsh_pairs(
+            sigs, width, LSH_MAX_BUCKET)
+        assert local == reference(width), width
+        assert (dropped, total) == (obs.get["dropped_buckets"],
+                                    obs.get["total_buckets"])
 
     monkeypatch.setattr(neardup, "SIG_DICT_MAX_SHINGLES", 0)
     assert query_pairs() == want4

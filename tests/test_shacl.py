@@ -650,3 +650,69 @@ def test_report_subplan_count_sublinear_in_shapes(spark):
     assert ("<urn:x:7:noname>", "7", "MinCountConstraintComponent") in got
     assert ("<urn:x:7:bad>", "7", "NodeKindConstraintComponent") in got
     assert ("<urn:x:7:bad>", "7", "PatternConstraintComponent") in got
+
+
+
+def test_report_build_runs_no_spark_job(spark, monkeypatch):
+    """Building the validation report must start no Spark job when no
+    shape has more than one join constraint: the per-shape barrier over
+    the target semi-join is taken only for shapes with several join
+    constraints, and lazily.  Where a barrier sits must not change the
+    rows: every report equals the same report built with no barrier."""
+    from gleaner_spark.operators import shacl
+    from gleaner_spark.operators.shacl import shape_validation_report
+
+    person = f"<{SCHEMA}Person>"
+    rows = [
+        ("<p1>", T, person),
+        ("<p1>", f"<{SCHEMA}name>", '"P One"'),
+        ("<bare>", f"<{SCHEMA}name>", '"Bare Named"'),
+        ("<a>", T, f"<{SCHEMA}Dataset>"),
+        ("<a>", f"<{SCHEMA}creator>", "<p1>"),
+        ("<a>", f"<{SCHEMA}publisher>", "<p1>"),
+        ("<b>", T, f"<{SCHEMA}Dataset>"),
+        ("<b>", f"<{SCHEMA}creator>", '"text:somebody"'),
+        ("<b>", f"<{SCHEMA}publisher>", "<bare>"),
+        ("<c>", T, f"<{SCHEMA}Dataset>"),
+        ("<c>", f"<{SCHEMA}creator>", "<nobody>"),
+    ]
+    or_creator = PropertyConstraint(
+        path=SCHEMA + "creator", min_count=1,
+        or_alternatives=[
+            PropertyConstraint(path="", pattern="^text:"),
+            PropertyConstraint(path="", class_iri=SCHEMA + "Person"),
+            PropertyConstraint(path=SCHEMA + "name", min_count=1),
+        ],
+    )
+    class_publisher = PropertyConstraint(path=SCHEMA + "publisher",
+                                         class_iri=SCHEMA + "Person")
+    single = [NodeShape("S1", SCHEMA + "Dataset", [or_creator]),
+              NodeShape("S3", SCHEMA + "Dataset", [class_publisher])]
+    multi = [NodeShape("S2", SCHEMA + "Dataset",
+                       [or_creator, class_publisher])]
+    t = _triples(spark, rows).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "shacl-report-build"
+    sc.setJobGroup(group, "build only")
+    try:
+        rep = shape_validation_report(t, single)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def report(shapes, built=None):
+        df = built if built is not None else shape_validation_report(
+            t, shapes)
+        return sorted((r.focus_node, r.shape_id,
+                       r.constraint_component.rsplit("#")[-1])
+                      for r in df.collect())
+
+    got_single, got_multi = report(single, rep), report(multi)
+    assert got_single == [("<b>", "S3", "ClassConstraintComponent"),
+                          ("<c>", "S1", "OrConstraintComponent")]
+    assert got_multi == [("<b>", "S2", "ClassConstraintComponent"),
+                         ("<c>", "S2", "OrConstraintComponent")]
+
+    monkeypatch.setattr(shacl, "reliable_ckpt", lambda df, eager=True: df)
+    assert report(single) == got_single
+    assert report(multi) == got_multi
